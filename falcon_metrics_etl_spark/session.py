@@ -10,6 +10,8 @@ revision_processor.ts:368-370), Arrow for the pandas-UDF path.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -123,13 +125,6 @@ def scale_gate(df, conf_key: str, default_bytes: int) -> bool:
     return est is None or est >= threshold
 
 
-# maintained-index staging for the IVM proof twins (r14; r13 used a
-# session-scoped eager localCheckpoint, r13 verdict #1 asked for the
-# tick-persisted read to be the AUDITED plan): state lands as plain
-# parquet under a state root, exactly the shape the streaming ticks
-# persist (streaming/cross_modal_tick.stage_cross_modal_state), and
-# the twins' audited plans READ it as a parquet scan instead of
-# re-deriving the batch closure in-lineage on a cold session.
 def run_concurrent(*thunks):
     """Submit independent Spark actions from one driver concurrently
     and return their results in order.
@@ -143,59 +138,44 @@ def run_concurrent(*thunks):
     concurrent jobs across the same executors, so overlapping the
     submissions collapses the serial overhead without touching the
     on-disk layout or the replay contract — each action keeps its own
-    failure semantics (the first exception re-raises after all
-    complete, so a replay sees the same partially-applied,
-    idempotent-by-design state a serial failure leaves).
+    failure semantics. This is ``overlap`` with an empty body, so it
+    keeps the same join contract: every thunk finishes and the pool
+    shuts down before the call returns or raises, and the first
+    exception (in submission order) re-raises only then — a replay
+    sees the same partially-applied, idempotent-by-design state a
+    serial failure leaves.
 
     Single-thunk calls run inline — no pool overhead on the common
     path."""
     if len(thunks) == 1:
         return [thunks[0]()]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futures = [ex.submit(t) for t in thunks]
-        errs = []
-        out = []
-        for f in futures:
-            try:
-                out.append(f.result())
-            except Exception as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-                out.append(None)
-        if errs:
-            raise errs[0]
-        return out
+    with overlap(*thunks) as results:
+        pass
+    return results
 
 
-def start_concurrent(*thunks):
-    """Non-blocking variant of run_concurrent: submit the actions and
-    return a join() closure that waits, re-raises the first failure,
-    and returns the results in order. Lets a tick overlap independent
-    job waves with intervening driver work (guide §2.6 — e.g. the
-    band-index appends depend only on the decode outputs, so they can
-    run while the edge/resolve jobs compute). Callers must join()
-    before anything that reads or compacts the written tables."""
-    from concurrent.futures import ThreadPoolExecutor
+@contextmanager
+def overlap(*thunks):
+    """Run ``thunks`` in the background while the ``with`` body runs —
+    a tick overlaps independent job waves with the calling thread's work
+    (the band-index appends depend only on the decode outputs, so they
+    run while the edge/resolve jobs compute).
 
-    ex = ThreadPoolExecutor(max_workers=max(1, len(thunks)))
-    futures = [ex.submit(t) for t in thunks]
-
-    def join():
-        errs = []
-        out = []
-        for f in futures:
-            try:
-                out.append(f.result())
-            except Exception as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-                out.append(None)
-        ex.shutdown(wait=False)
-        if errs:
-            raise errs[0]
-        return out
-
-    return join
+    Join on every exit: when the block ends, normally or by exception,
+    it waits for every thunk and shuts the pool down, so no writer is
+    left running behind a failed tick and an immediate replay never
+    races one. If the body raised, the body's exception propagates;
+    otherwise the first thunk exception (in submission order)
+    re-raises. Yields a list that holds the thunks' results, in order,
+    once the block has exited cleanly."""
+    results: list = []
+    with ThreadPoolExecutor(max_workers=max(1, len(thunks))) as pool:
+        futures = [pool.submit(t) for t in thunks]
+        yield results
+    for f in futures:
+        if f.exception() is not None:
+            raise f.exception()
+    results.extend(f.result() for f in futures)
 
 
 STATE_DIR_ENV = "FALCON_METRICS_STATE_DIR"
@@ -409,6 +389,13 @@ def gc_staged_state(
     return removed
 
 
+# maintained-index staging for the IVM proof twins (r14; r13 used a
+# session-scoped eager localCheckpoint, r13 verdict #1 asked for the
+# tick-persisted read to be the AUDITED plan): state lands as plain
+# parquet under a state root, exactly the shape the streaming ticks
+# persist (streaming/cross_modal_tick.stage_cross_modal_state), and
+# the twins' audited plans READ it as a parquet scan instead of
+# re-deriving the batch closure in-lineage on a cold session.
 def staged_index(
     spark,
     key: str,

@@ -61,6 +61,7 @@ import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 CURRENT_POINTER = "_CURRENT"
 RETIRED_MARKER = "_RETIRED"
@@ -489,6 +490,53 @@ def merge_state(
     overwrite_state(
         survivors.unionByName(updates, allowMissingColumns=True), path
     )
+
+
+def append_batch(
+    spark: SparkSession, path: str, rows: DataFrame, key: str,
+    batch_id: int, schema: str,
+) -> None:
+    """The ticks' replay-safe append: ``rows`` whose ``key`` is not
+    yet in the table, projected onto the table's columns and tagged
+    with ``batch_id``, land through ``append_state``. The table is
+    read when the step runs (``schema`` gives its cold-start shape),
+    so a replay of the same batch appends nothing and a replay after
+    a partial failure fills only what did not land."""
+    from falcon_metrics_etl_spark.sinks.merge import anti_existing
+
+    full = read_state(spark, path, schema)
+    cols = [c for c in full.columns if c != "batch_id"]
+    append_state(
+        anti_existing(rows, full, key).select(
+            *cols, F.lit(int(batch_id)).alias("batch_id")
+        ),
+        path,
+    )
+
+
+def repoint_keepers(
+    spark: SparkSession, path: str, moves: DataFrame, keep_col: str,
+    keys, schema: str,
+) -> None:
+    """The ticks' displaced-keeper repoint: every row whose
+    ``keep_col`` names a displaced keeper takes that keeper's
+    replacement, merged on ``keys`` through ``merge_state``. ``moves``
+    is (doc_id, new_keep) — ``resolve_keep_best``'s displaced frame,
+    in the table's id space. A table with no row pointing at a
+    displaced keeper is left alone, so a tick that displaces one
+    modality's keeper never rewrites the others' tables. Idempotent:
+    a replay finds the rows already repointed."""
+    upd = (
+        read_state(spark, path, schema)
+        .join(
+            F.broadcast(moves.withColumnRenamed("doc_id", keep_col)),
+            keep_col,
+        )
+        .withColumn(keep_col, F.col("new_keep"))
+        .drop("new_keep")
+    )
+    if not upd.isEmpty():
+        merge_state(spark, path, upd, keys)
 
 
 def _local_file_stats(path: str) -> tuple[int, int]:

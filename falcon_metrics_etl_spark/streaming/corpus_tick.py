@@ -35,8 +35,12 @@ Replay safety (at-least-once foreachBatch, same contract as
 streaming/admission.py): every index row carries its (replay-stable)
 batch_id; probes EXCLUDE the current batch's own rows, so a replayed
 batch scores against exactly the state it originally saw; appends
-anti-join the full index, so a replay appends nothing; flags land
-keyed on doc_id (last-write-wins with identical values).
+anti-join the full index, so a replay appends nothing
+(``state.append_batch``); flags land keyed on doc_id (last-write-wins
+with identical values). The flags merge overlaps the index appends in
+a ``session.overlap`` block, which joins on every exit: when the
+append wave fails, the merge has finished before the exception leaves
+the tick, so a replay never races a writer.
 
 Admission policy for near-dups is greedy keep-first: a batch doc is
 rejected when it near-dups the admitted corpus (the corpus always
@@ -57,17 +61,20 @@ from falcon_metrics_etl_spark.plans.dedup_lsh import (
     MINHASH_JACCARD_T,
     lsh_frames_of,
 )
-from falcon_metrics_etl_spark.session import run_concurrent, start_concurrent
+from falcon_metrics_etl_spark.session import overlap, run_concurrent
 from falcon_metrics_etl_spark.state import (
+    append_batch,
     maintain_state_dir,
     merge_state,
     overwrite_state,
+    read_state,
 )
 from falcon_metrics_etl_spark.state import resolve_state_path as _rsp
-from falcon_metrics_etl_spark.sinks.merge import (
-    _target_exists,
-    anti_existing,
-)
+from falcon_metrics_etl_spark.sinks.merge import _target_exists
+
+FP_SCHEMA = "fp string, canonical_id long, batch_id long"
+BAND_SCHEMA = "doc_id long, band int, bkey string, batch_id long"
+SHINGLE_SCHEMA = "doc_id long, shs array<string>, batch_id long"
 
 
 def _gate_status(docs: DataFrame) -> DataFrame:
@@ -83,12 +90,6 @@ def _gate_status(docs: DataFrame) -> DataFrame:
         "fp",
         TX.cleaning_gate_verdict().alias("gate_status"),
     )
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    if _target_exists(spark, path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], schema)
 
 
 def stage_corpus_state(
@@ -162,9 +163,9 @@ def corpus_ingest_tick(
     gated = _gate_status(batch_df).localCheckpoint(eager=True)
 
     # --- exact-dup gate: probe the fp index (excluding own batch) ---
-    fp_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/fp_index"), "fp string, canonical_id long, batch_id long"
-    ).filter(F.col("batch_id") != bid)
+    fp_idx = read_state(spark, f"{state_dir}/fp_index", FP_SCHEMA).filter(
+        F.col("batch_id") != bid
+    )
     batch_canon = F.min(
         F.when(F.col("gate_status") == "pass", F.col("doc_id"))
     ).over(Window.partitionBy("fp"))
@@ -217,10 +218,8 @@ def corpus_ingest_tick(
         lambda: sh.localCheckpoint(eager=True),
         lambda: bands.localCheckpoint(eager=True),
     )
-    band_idx = _read_or_empty(
-        spark,
-        _rsp(f"{state_dir}/band_index"),
-        "doc_id long, band int, bkey string, batch_id long",
+    band_idx = read_state(
+        spark, f"{state_dir}/band_index", BAND_SCHEMA
     ).filter(F.col("batch_id") != bid)
     # candidates vs the admitted corpus + smaller-id batch mates
     # the probing side is the batch — micro-batch-bounded, broadcast
@@ -242,10 +241,8 @@ def corpus_ingest_tick(
     )
     # exact verification: batch shingles vs (index ∪ batch) shingles,
     # fetched ONLY for candidate ids
-    sh_idx = _read_or_empty(
-        spark,
-        _rsp(f"{state_dir}/shingle_index"),
-        "doc_id long, shs array<string>, batch_id long",
+    sh_idx = read_state(
+        spark, f"{state_dir}/shingle_index", SHINGLE_SCHEMA
     ).filter(F.col("batch_id") != bid)
     old_toks = sh_idx.select("doc_id", "shs").unionByName(
         toks.select("doc_id", "shs")
@@ -325,66 +322,38 @@ def corpus_ingest_tick(
     flags = status.join(
         budgets.select("doc_id", "n_tokens"), "doc_id", "left"
     ).select("doc_id", "status", "n_tokens", F.lit(bid).alias("batch_id"))
-    # r17: the flags merge (which carries the tokenize compute in its
-    # lineage) touches only the flags table — disjoint from the three
-    # index appends — so it overlaps them (joined below, before
-    # maintenance)
-    join_flags = start_concurrent(
-        lambda: merge_state(spark, f"{state_dir}/flags", flags, ["doc_id"])
-    )
-
     # only ADMITTED docs register their fp (advisor r10: a near-dup-
     # rejected doc must not become canonical_id for future exact
     # copies — those copies now fall through to the near-dup gate and
     # are rejected against the same corpus doc their original was)
-    admitted_ids = admitted.select("doc_id")
-    tag = F.lit(bid).alias("batch_id")
-
-    def _append_fps() -> None:
-        full_fp = _read_or_empty(
-            spark,
-            _rsp(f"{state_dir}/fp_index"),
-            "fp string, canonical_id long, batch_id long",
+    admitted_ids = F.broadcast(admitted.select("doc_id"))
+    new_fps = deduped.filter(F.col("gate_status") == "pass").join(
+        near_dups, "doc_id", "left_anti"
+    ).select("fp", F.col("doc_id").alias("canonical_id"))
+    # r17: the flags merge (which carries the tokenize compute in its
+    # lineage) touches only the flags table — disjoint from the three
+    # index appends — so it overlaps them and joins when the block
+    # exits, normally or not, before maintenance
+    with overlap(
+        lambda: merge_state(spark, f"{state_dir}/flags", flags, ["doc_id"])
+    ):
+        # the three appends target disjoint tables — one concurrent wave
+        run_concurrent(
+            lambda: append_batch(
+                spark, f"{state_dir}/fp_index", new_fps, "fp", bid,
+                FP_SCHEMA,
+            ),
+            lambda: append_batch(
+                spark, f"{state_dir}/band_index",
+                bands.join(admitted_ids, "doc_id", "left_semi"),
+                "doc_id", bid, BAND_SCHEMA,
+            ),
+            lambda: append_batch(
+                spark, f"{state_dir}/shingle_index",
+                toks.join(admitted_ids, "doc_id", "left_semi"),
+                "doc_id", bid, SHINGLE_SCHEMA,
+            ),
         )
-        new_fps = deduped.filter(F.col("gate_status") == "pass").join(
-            near_dups, "doc_id", "left_anti"
-        ).select("fp", F.col("doc_id").alias("canonical_id"))
-        (
-            anti_existing(new_fps, full_fp, "fp")
-            .select("fp", "canonical_id", tag)
-            .write.mode("append").parquet(_rsp(f"{state_dir}/fp_index"))
-        )
-
-    def _append_admitted(sub: str, schema: str, frame, cols: list) -> None:
-        full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-        (
-            anti_existing(
-                frame.join(F.broadcast(admitted_ids), "doc_id", "left_semi"),
-                full,
-                "doc_id",
-            )
-            .select(*cols, tag)
-            .write.mode("append").parquet(_rsp(f"{state_dir}/{sub}"))
-        )
-
-    # the three appends target disjoint tables with the same anti-join
-    # + batch-tag replay contract — one concurrent wave
-    run_concurrent(
-        _append_fps,
-        lambda: _append_admitted(
-            "band_index",
-            "doc_id long, band int, bkey string, batch_id long",
-            bands,
-            ["doc_id", "band", "bkey"],
-        ),
-        lambda: _append_admitted(
-            "shingle_index",
-            "doc_id long, shs array<string>, batch_id long",
-            toks,
-            ["doc_id", "shs"],
-        ),
-    )
-    join_flags()
 
     # ---- in-cadence maintenance (r15, verdict #1) -------------------
     if maintenance_file_threshold is not None:

@@ -46,7 +46,12 @@ through sinks/bucketed.py keyed on their join columns):
 Replay safety (the media tick's contract): probes exclude the current
 batch_id's own rows, appends anti-join on node, flags land keyed on
 (doc_id, modality), mutation order flags -> repoint -> append with
-each step idempotent.
+each step idempotent (``state.append_batch``,
+``state.repoint_keepers``, ``state.merge_state``). The band appends
+and the flags merge overlap the later waves inside ``session.overlap``
+blocks, which join on every exit, so a failed wave leaves no writer
+running behind the tick. Both node-tagged families land their flags
+through one function (``_node_flags``), staged and ticked.
 
 r13 additions:
 - ``unified_media_ingest_tick`` — THE production entry for a corpus
@@ -64,6 +69,8 @@ r13 additions:
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,22 +78,18 @@ from falcon_metrics_etl_spark.functions import multimodal as MM
 from falcon_metrics_etl_spark.operators.keep_best import resolve_keep_best
 from falcon_metrics_etl_spark.plans.media_dedup import (
     AUDIO_SPHASH_BANDS,
-    DHASH_HAMMING_T,
-    VIDEO_SHARED_T,
     cross_modal_keep_best_of,
     image_bands_of,
 )
-from falcon_metrics_etl_spark.session import run_concurrent, start_concurrent
+from falcon_metrics_etl_spark.session import overlap, run_concurrent
 from falcon_metrics_etl_spark.state import (
+    append_batch,
     claim_state_layout,
     maintain_state_dir,
     merge_state,
     overwrite_state,
-)
-from falcon_metrics_etl_spark.state import resolve_state_path as _rsp
-from falcon_metrics_etl_spark.sinks.merge import (
-    _target_exists,
-    anti_existing as _anti_existing,
+    read_state,
+    repoint_keepers,
 )
 
 CM_IMG_SCHEMA = (
@@ -104,34 +107,41 @@ CM_FRAME_SCHEMA = (
 )
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    if _target_exists(spark, path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], schema)
-
-
-def _phase_timer():
-    """Env-gated phase profiler (FALCON_TICK_PROFILE=1): returns a
-    mark(label) closure printing per-phase wall clock to stderr.
-    Costs one time.time() per phase when disabled."""
-    import os
-    import sys as _sys
-    import time as _time
-
-    enabled = bool(os.environ.get("FALCON_TICK_PROFILE"))
-    state = {"t": _time.time()}
-
-    def mark(label: str) -> None:
-        now = _time.time()
-        if enabled:
-            print(
-                f"[tick] {label}: {now - state['t']:.2f}s",
-                file=_sys.stderr,
-                flush=True,
+def _node_flags(verdicts, n_mod: int, batch_id: int, displaced=None):
+    """(doc_id, modality, status, batch_id) flags of node-tagged
+    verdicts (doc_id = node, node = n_mod*doc_id + m with image 0,
+    video 1, audio 2; is_kept) plus, when given, the displaced
+    incumbent keepers — the one flag layout of the bimodal and
+    trimodal state families, staged and ticked."""
+    node = F.col("doc_id")
+    doc_modality = (
+        F.expr(f"doc_id div {n_mod}").cast("long").alias("doc_id"),
+        F.when(node % n_mod == 1, F.lit("video"))
+        .when(node % n_mod == 2, F.lit("audio"))
+        .otherwise(F.lit("image"))
+        .alias("modality"),
+    )
+    flags = verdicts.select(
+        *doc_modality,
+        F.when(F.col("is_kept"), F.lit("kept"))
+        .otherwise(F.lit("dropped:near_dup"))
+        .alias("status"),
+    )
+    if displaced is not None:
+        flags = flags.unionByName(
+            displaced.select(
+                *doc_modality, F.lit("displaced:near_dup").alias("status")
             )
-        state["t"] = now
+        )
+    return flags.withColumn("batch_id", F.lit(int(batch_id)))
 
-    return mark
+
+def _staged_verdicts(kb: DataFrame) -> DataFrame:
+    """A batch closure's member rows as node verdicts."""
+    return kb.select(
+        F.col("node").alias("doc_id"),
+        (F.col("node") == F.col("keep_node")).alias("is_kept"),
+    )
 
 
 def _fingerprint_batch(
@@ -213,15 +223,10 @@ def stage_cross_modal_state(
             "cm_fband_index",
         ),
     )
-    _stage_flags = kb.select(
-        "doc_id",
-        "modality",
-        F.when(F.col("node") == F.col("keep_node"), F.lit("kept"))
-        .otherwise(F.lit("dropped:near_dup"))
-        .alias("status"),
-        F.lit(int(batch_id)).alias("batch_id"),
+    overwrite_state(
+        _node_flags(_staged_verdicts(kb), 2, batch_id),
+        f"{state_dir}/cm_flags",
     )
-    overwrite_state(_stage_flags, f"{state_dir}/cm_flags")
 
 
 def cross_modal_ingest_tick(
@@ -255,17 +260,17 @@ def cross_modal_ingest_tick(
         F.count(F.lit(1)).cast("long").alias("n_frames")
     )
 
-    img_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm_image_index"), CM_IMG_SCHEMA
+    img_idx = read_state(
+        spark, f"{state_dir}/cm_image_index", CM_IMG_SCHEMA
     ).filter(F.col("batch_id") != bid)
-    tband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm_tband_index"), CM_TBAND_SCHEMA
+    tband_idx = read_state(
+        spark, f"{state_dir}/cm_tband_index", CM_TBAND_SCHEMA
     ).filter(F.col("batch_id") != bid)
-    frame_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm_frame_index"), CM_FRAME_SCHEMA
+    frame_idx = read_state(
+        spark, f"{state_dir}/cm_frame_index", CM_FRAME_SCHEMA
     ).filter(F.col("batch_id") != bid)
-    fband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm_fband_index"), CM_FBAND_SCHEMA
+    fband_idx = read_state(
+        spark, f"{state_dir}/cm_fband_index", CM_FBAND_SCHEMA
     ).filter(F.col("batch_id") != bid)
 
     # probed side = stored band rows (hash carried) + the batch's own
@@ -295,163 +300,115 @@ def cross_modal_ingest_tick(
 
     # ---- band appends, overlapped (r17, guide §2.6) -----------------
     # the two band-index appends depend ONLY on the decode outputs —
-    # they run WHILE the edge/resolve jobs compute and join before the
-    # node appends below. Safe against the concurrent edge reads:
-    # every state-side read filters batch_id != bid (the replay
-    # contract already tolerates this batch's rows), and the
-    # _read_or_empty frames above listed their files before these
-    # writes land.
-    tag = F.lit(bid).alias("batch_id")
-
-    def _append(sub: str, schema: str, frame: DataFrame, key: str, cols) -> None:
-        full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-        (
-            _anti_existing(frame, full, key)
-            .select(*cols, tag)
-            .write.mode("append").parquet(_rsp(f"{state_dir}/{sub}"))
-        )
-
-    join_bands = start_concurrent(
-        lambda: _append(
-            "cm_tband_index", CM_TBAND_SCHEMA, tb_new, "doc_id",
-            ["doc_id", "dhash", "band", "byte"],
+    # they run WHILE the edge/resolve jobs compute and join when this
+    # block exits, after the node appends (or on any failure inside
+    # it). Safe against the concurrent edge reads: every state-side
+    # read filters batch_id != bid (the replay contract already
+    # tolerates this batch's rows), and the read_state frames above
+    # listed their files before these writes land.
+    with overlap(
+        lambda: append_batch(
+            spark, f"{state_dir}/cm_tband_index", tb_new, "doc_id", bid,
+            CM_TBAND_SCHEMA,
         ),
-        lambda: _append(
-            "cm_fband_index", CM_FBAND_SCHEMA, fb_new, "doc_id",
-            ["doc_id", "frame_dhash", "band", "byte"],
+        lambda: append_batch(
+            spark, f"{state_dir}/cm_fband_index", fb_new, "doc_id", bid,
+            CM_FBAND_SCHEMA,
         ),
-    )
+    ):
+        # the probing side is the batch — micro-batch-bounded, so every
+        # edge family broadcasts it and the state side never shuffles
+        edges = cross_modal_edges_of(
+            F.broadcast(tb_new), tb_all, F.broadcast(fb_new), fb_all,
+            F.broadcast(vsig_new), vsig_all,
+        ).localCheckpoint(eager=True)
 
-    # the probing side is the batch — micro-batch-bounded, so every
-    # edge family broadcasts it and the state side never shuffles
-    edges = cross_modal_edges_of(
-        F.broadcast(tb_new), tb_all, F.broadcast(fb_new), fb_all,
-        F.broadcast(vsig_new), vsig_all,
-    ).localCheckpoint(eager=True)
-
-    # joint resolution over modality-tagged nodes
-    new_q = t_new.select(
-        (F.col("doc_id") * 2).alias("doc_id"),
-        F.lit(1).cast("long").alias("n_frames"),
-    ).unionByName(
-        n_new.select(
-            (F.col("doc_id") * 2 + 1).alias("doc_id"), "n_frames"
+        # joint resolution over modality-tagged nodes
+        new_q = t_new.select(
+            (F.col("doc_id") * 2).alias("doc_id"),
+            F.lit(1).cast("long").alias("n_frames"),
+        ).unionByName(
+            n_new.select(
+                (F.col("doc_id") * 2 + 1).alias("doc_id"), "n_frames"
+            )
         )
-    )
-    idx_q = img_idx.select(
-        F.col("node").alias("doc_id"),
-        F.col("keep_node").alias("keep_id"),
-        F.lit(1).cast("long").alias("n_frames"),
-    ).unionByName(
-        # one row per (doc, frame_dhash): resolve_keep_best's bounded
-        # path dedupes per doc AFTER its endpoint semi-join (r16) —
-        # deduping here cost a state-wide shuffle every tick
-        frame_idx.select(
+        idx_q = img_idx.select(
             F.col("node").alias("doc_id"),
             F.col("keep_node").alias("keep_id"),
-            "n_frames",
-        )
-    )
-    verdicts, displaced = resolve_keep_best(
-        new_q, idx_q, edges, ["n_frames"], bounded_batch=True
-    )
-    verdicts, displaced = run_concurrent(
-        lambda: verdicts.localCheckpoint(eager=True),
-        lambda: displaced.localCheckpoint(eager=True),
-    )
-
-    # ---- 1) land flags (keyed merge) --------------------------------
-    def _fmt(node_col):
-        return (
-            F.when(node_col % 2 == 1, F.lit("video"))
-            .otherwise(F.lit("image"))
-            .alias("modality")
-        )
-
-    flags = (
-        verdicts.select(
-            F.expr("doc_id div 2").cast("long").alias("did"),
-            _fmt(F.col("doc_id")),
-            F.when(F.col("is_kept"), F.lit("kept"))
-            .otherwise(F.lit("dropped:near_dup"))
-            .alias("status"),
-        )
-        .unionByName(
-            displaced.select(
-                F.expr("doc_id div 2").cast("long").alias("did"),
-                _fmt(F.col("doc_id")),
-                F.lit("displaced:near_dup").alias("status"),
+            F.lit(1).cast("long").alias("n_frames"),
+        ).unionByName(
+            # one row per (doc, frame_dhash): resolve_keep_best's
+            # bounded path dedupes per doc AFTER its endpoint semi-join
+            # (r16) — deduping here cost a state-wide shuffle every tick
+            frame_idx.select(
+                F.col("node").alias("doc_id"),
+                F.col("keep_node").alias("keep_id"),
+                "n_frames",
             )
         )
-        .select(
-            F.col("did").alias("doc_id"), "modality", "status",
-            F.lit(bid).alias("batch_id"),
+        verdicts, displaced = resolve_keep_best(
+            new_q, idx_q, edges, ["n_frames"], bounded_batch=True
         )
-    )
-    # r17: the flags merge touches only cm_flags — disjoint from the
-    # repoints and appends — so it overlaps them (joined below)
-    join_flags = start_concurrent(
-        lambda: merge_state(
-            spark, f"{state_dir}/cm_flags", flags, ["doc_id", "modality"]
+        verdicts, displaced = run_concurrent(
+            lambda: verdicts.localCheckpoint(eager=True),
+            lambda: displaced.localCheckpoint(eager=True),
         )
-    )
+        flags = _node_flags(verdicts, 2, bid, displaced)
 
-    # ---- 2) repoint displaced keepers across BOTH indexes -----------
-    if not displaced.isEmpty():
-        rp = displaced.select(
-            F.col("doc_id").alias("keep_node"), "new_keep"
-        )
-
-        def _repoint(sub: str, schema: str, keys: list) -> None:
-            full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-            upd = (
-                full.join(F.broadcast(rp), "keep_node")
-                .withColumn("keep_node", F.col("new_keep"))
-                .drop("new_keep")
+        # ---- 1) land flags (keyed merge), overlapped ----------------
+        # r17: the flags merge touches only cm_flags — disjoint from
+        # the repoints and appends — so it overlaps them, joined when
+        # this block exits (normally or by exception)
+        with overlap(
+            lambda: merge_state(
+                spark, f"{state_dir}/cm_flags", flags, ["doc_id", "modality"]
             )
-            merge_state(spark, f"{state_dir}/{sub}", upd, keys)
+        ):
+            # ---- 2) repoint displaced keepers across BOTH indexes ---
+            # the two index repoints touch disjoint tables — concurrent
+            if not displaced.isEmpty():
+                run_concurrent(
+                    lambda: repoint_keepers(
+                        spark, f"{state_dir}/cm_image_index", displaced,
+                        "keep_node", ["node"], CM_IMG_SCHEMA,
+                    ),
+                    lambda: repoint_keepers(
+                        spark, f"{state_dir}/cm_frame_index", displaced,
+                        "keep_node", ["node", "frame_dhash"],
+                        CM_FRAME_SCHEMA,
+                    ),
+                )
 
-        # the two index repoints touch disjoint tables — concurrent
-        run_concurrent(
-            lambda: _repoint("cm_image_index", CM_IMG_SCHEMA, ["node"]),
-            lambda: _repoint(
-                "cm_frame_index", CM_FRAME_SCHEMA, ["node", "frame_dhash"]
-            ),
-        )
-
-    # ---- 3) append the batch (kept AND dropped; anti-joined) --------
-    # (the two band appends were started after decode; joined below)
-    kmap = verdicts.select(
-        F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
-    )
-
-    new_img = t_new.select(
-        (F.col("doc_id") * 2).alias("node"), "doc_id", "dhash"
-    ).join(F.broadcast(kmap), "node")
-    new_fr = (
-        vsig_new.select(
-            (F.col("doc_id") * 2 + 1).alias("node"),
-            "doc_id",
-            "frame_dhash",
-        )
-        .join(F.broadcast(n_new), "doc_id")
-        .join(F.broadcast(kmap), "node")
-    )
-    # the two node appends run as one concurrent wave; the band
-    # appends and the flags merge join here, before maintenance can
-    # compact the tables they write
-    run_concurrent(
-        lambda: _append(
-            "cm_image_index", CM_IMG_SCHEMA, new_img, "node",
-            ["node", "doc_id", "dhash", "keep_node"],
-        ),
-        lambda: _append(
-            "cm_frame_index", CM_FRAME_SCHEMA, new_fr, "node",
-            ["node", "doc_id", "frame_dhash", "n_frames", "keep_node"],
-        ),
-    )
-    join_bands()
-    join_flags()
+            # ---- 3) append the batch (kept AND dropped; anti-joined)
+            kmap = F.broadcast(
+                verdicts.select(
+                    F.col("doc_id").alias("node"),
+                    F.col("keep_id").alias("keep_node"),
+                )
+            )
+            new_img = t_new.select(
+                (F.col("doc_id") * 2).alias("node"), "doc_id", "dhash"
+            ).join(kmap, "node")
+            new_fr = (
+                vsig_new.select(
+                    (F.col("doc_id") * 2 + 1).alias("node"),
+                    "doc_id",
+                    "frame_dhash",
+                )
+                .join(F.broadcast(n_new), "doc_id")
+                .join(kmap, "node")
+            )
+            # the two node appends run as one concurrent wave
+            run_concurrent(
+                lambda: append_batch(
+                    spark, f"{state_dir}/cm_image_index", new_img, "node",
+                    bid, CM_IMG_SCHEMA,
+                ),
+                lambda: append_batch(
+                    spark, f"{state_dir}/cm_frame_index", new_fr, "node",
+                    bid, CM_FRAME_SCHEMA,
+                ),
+            )
 
     # ---- in-cadence maintenance (r15, verdict #1): GC retired state
     # snapshots, compact tables past the live-file threshold
@@ -704,15 +661,10 @@ def stage_trimodal_state(
             "cm3_trband_index",
         ),
     )
-    _stage_flags = kb.select(
-        "doc_id",
-        "modality",
-        F.when(F.col("node") == F.col("keep_node"), F.lit("kept"))
-        .otherwise(F.lit("dropped:near_dup"))
-        .alias("status"),
-        F.lit(int(batch_id)).alias("batch_id"),
+    overwrite_state(
+        _node_flags(_staged_verdicts(kb), 3, batch_id),
+        f"{state_dir}/cm3_flags",
     )
-    overwrite_state(_stage_flags, f"{state_dir}/cm3_flags")
 
 
 def trimodal_ingest_tick(
@@ -738,7 +690,6 @@ def trimodal_ingest_tick(
     )
 
     bid = int(batch_id)
-    mark = _phase_timer()
     t_new, v_new, a_new, r_new = _fingerprint_batch3(
         batch_docs, thumbs, clips, recordings, tracks, vfp
     )
@@ -758,32 +709,31 @@ def trimodal_ingest_tick(
             lambda df=a_new: df.localCheckpoint(eager=True),
             lambda df=r_new: df.localCheckpoint(eager=True),
         )
-    mark("decode")
     vsig_new = v_new.select("doc_id", "frame_dhash").distinct()
     n_new = v_new.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_frames")
     )
 
-    img_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_image_index"), CM3_IMG_SCHEMA
+    img_idx = read_state(
+        spark, f"{state_dir}/cm3_image_index", CM3_IMG_SCHEMA
     ).filter(F.col("batch_id") != bid)
-    tband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_tband_index"), CM_TBAND_SCHEMA
+    tband_idx = read_state(
+        spark, f"{state_dir}/cm3_tband_index", CM_TBAND_SCHEMA
     ).filter(F.col("batch_id") != bid)
-    frame_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_frame_index"), CM3_FRAME_SCHEMA
+    frame_idx = read_state(
+        spark, f"{state_dir}/cm3_frame_index", CM3_FRAME_SCHEMA
     ).filter(F.col("batch_id") != bid)
-    fband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_fband_index"), CM_FBAND_SCHEMA
+    fband_idx = read_state(
+        spark, f"{state_dir}/cm3_fband_index", CM_FBAND_SCHEMA
     ).filter(F.col("batch_id") != bid)
-    audio_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_audio_index"), CM3_AUDIO_SCHEMA
+    audio_idx = read_state(
+        spark, f"{state_dir}/cm3_audio_index", CM3_AUDIO_SCHEMA
     ).filter(F.col("batch_id") != bid)
-    aband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_aband_index"), CM3_SPBAND_SCHEMA
+    aband_idx = read_state(
+        spark, f"{state_dir}/cm3_aband_index", CM3_SPBAND_SCHEMA
     ).filter(F.col("batch_id") != bid)
-    trband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_trband_index"), CM3_SPBAND_SCHEMA
+    trband_idx = read_state(
+        spark, f"{state_dir}/cm3_trband_index", CM3_SPBAND_SCHEMA
     ).filter(F.col("batch_id") != bid)
 
     tb_new = image_bands_of(t_new)
@@ -812,241 +762,170 @@ def trimodal_ingest_tick(
     # ---- band appends, overlapped (r17, guide §2.6) -----------------
     # the four band-index appends depend ONLY on the decode outputs —
     # not on edges/resolve — so they run WHILE the edge and resolve
-    # jobs compute and are joined before the node appends below. Safe
-    # against the concurrent edge reads: every state-side edge read
-    # filters batch_id != bid (the replay contract already tolerates
-    # this batch's rows being present), and the _read_or_empty frames
-    # above listed their file sets before these writes land.
+    # jobs compute and join when this block exits, after the node
+    # appends (or on any failure inside it). Safe against the
+    # concurrent edge reads: every state-side edge read filters
+    # batch_id != bid (the replay contract already tolerates this
+    # batch's rows being present), and the read_state frames above
+    # listed their file sets before these writes land.
     band_frames = (
-        ("cm3_tband_index", CM_TBAND_SCHEMA, tb_new,
-         ["doc_id", "dhash", "band", "byte"]),
-        ("cm3_fband_index", CM_FBAND_SCHEMA, fb_new,
-         ["doc_id", "frame_dhash", "band", "byte"]),
-        ("cm3_aband_index", CM3_SPBAND_SCHEMA, rb_new,
-         ["doc_id", "sphash", "band", "byte"]),
-        ("cm3_trband_index", CM3_SPBAND_SCHEMA, trb_new,
-         ["doc_id", "sphash", "band", "byte"]),
+        ("cm3_tband_index", CM_TBAND_SCHEMA, tb_new),
+        ("cm3_fband_index", CM_FBAND_SCHEMA, fb_new),
+        ("cm3_aband_index", CM3_SPBAND_SCHEMA, rb_new),
+        ("cm3_trband_index", CM3_SPBAND_SCHEMA, trb_new),
     )
-    tag = F.lit(bid).alias("batch_id")
-
-    def _append_bands(sub: str, schema: str, frame: DataFrame, cols) -> None:
-        full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-        (
-            _anti_existing(frame, full, "doc_id")
-            .select(*cols, tag)
-            .write.mode("append").parquet(_rsp(f"{state_dir}/{sub}"))
-        )
-
-    join_bands = start_concurrent(
+    with overlap(
         *(
-            lambda s=sub, sc=schema, f=frame, c=cols: _append_bands(
-                s, sc, f, c
+            partial(
+                append_batch, spark, f"{state_dir}/{sub}", frame, "doc_id",
+                bid, schema,
             )
-            for sub, schema, frame, cols in band_frames
+            for sub, schema, frame in band_frames
         )
-    )
-
-    # the probing side is the batch — micro-batch-bounded, so every
-    # edge family broadcasts it and the state side never shuffles
-    edges = trimodal_edges_delta(
-        F.broadcast(tb_new), tb_all, F.broadcast(fb_new), fb_all,
-        F.broadcast(vsig_new), vsig_all,
-        F.broadcast(rb_new), rb_all, F.broadcast(trb_new), trb_all,
-    ).localCheckpoint(eager=True)
-    mark("edges")
-
-    # joint resolution: quality = (modality rank, decoded units)
-    new_q = (
-        t_new.select(
-            (F.col("doc_id") * 3).alias("doc_id"),
-            F.lit(0).alias("mrank"),
-            F.lit(1).cast("long").alias("n_units"),
-        )
-        .unionByName(
-            n_new.select(
-                (F.col("doc_id") * 3 + 1).alias("doc_id"),
-                F.lit(2).alias("mrank"),
-                F.col("n_frames").alias("n_units"),
-            )
-        )
-        .unionByName(
-            a_new.select(
-                (F.col("doc_id") * 3 + 2).alias("doc_id"),
-                F.lit(1).alias("mrank"),
-                F.col("n_windows").cast("long").alias("n_units"),
-            )
-        )
-    )
-    idx_q = (
-        img_idx.select(
-            F.col("node").alias("doc_id"),
-            F.col("keep_node").alias("keep_id"),
-            F.lit(0).alias("mrank"),
-            F.lit(1).cast("long").alias("n_units"),
-        )
-        .unionByName(
-            # per-frame rows: bounded resolve dedupes per doc after
-            # its endpoint semi-join (r16) — no state-wide shuffle
-            frame_idx.select(
-                F.col("node").alias("doc_id"),
-                F.col("keep_node").alias("keep_id"),
-                F.lit(2).alias("mrank"),
-                F.col("n_frames").alias("n_units"),
-            )
-        )
-        .unionByName(
-            audio_idx.select(
-                F.col("node").alias("doc_id"),
-                F.col("keep_node").alias("keep_id"),
-                F.lit(1).alias("mrank"),
-                F.col("n_windows").cast("long").alias("n_units"),
-            )
-        )
-    )
-    verdicts, displaced = resolve_keep_best(
-        new_q, idx_q, edges, ["mrank", "n_units"], bounded_batch=True
-    )
-    verdicts, displaced = run_concurrent(
-        lambda: verdicts.localCheckpoint(eager=True),
-        lambda: displaced.localCheckpoint(eager=True),
-    )
-    mark("resolve")
-
-    # ---- 1) land flags (keyed merge) --------------------------------
-    def _fmt3(node_col):
-        return (
-            F.when(node_col % 3 == 1, F.lit("video"))
-            .when(node_col % 3 == 2, F.lit("audio"))
-            .otherwise(F.lit("image"))
-            .alias("modality")
-        )
-
-    flags = (
-        verdicts.select(
-            F.expr("doc_id div 3").cast("long").alias("did"),
-            _fmt3(F.col("doc_id")),
-            F.when(F.col("is_kept"), F.lit("kept"))
-            .otherwise(F.lit("dropped:near_dup"))
-            .alias("status"),
-        )
-        .unionByName(
-            displaced.select(
-                F.expr("doc_id div 3").cast("long").alias("did"),
-                _fmt3(F.col("doc_id")),
-                F.lit("displaced:near_dup").alias("status"),
-            )
-        )
-        .select(
-            F.col("did").alias("doc_id"), "modality", "status",
-            F.lit(bid).alias("batch_id"),
-        )
-    )
-    # r17: the flags merge touches only cm3_flags — disjoint from the
-    # repoints (node indexes) and every append — so it overlaps them
-    # (joined before maintenance/return)
-    join_flags = start_concurrent(
-        lambda: merge_state(
-            spark, f"{state_dir}/cm3_flags", flags, ["doc_id", "modality"]
-        )
-    )
-    mark("flags")
-
-    # ---- 2) repoint displaced keepers, per modality -----------------
-    # keep_node references stay WITHIN a modality's index (a row's
-    # keeper can be any modality, so match on keep_node regardless of
-    # parity — but an index only needs rewriting when at least one of
-    # ITS rows points at a displaced keeper). Guarding each
-    # merge_state on its own update set keeps a tick that displaces
-    # one audio keeper from read+rewriting the untouched image and
-    # frame tables — tick cost must scale with the delta, not total
-    # state (the media tick's per-modality guards, generalized).
-    if not displaced.isEmpty():
-        rp = displaced.select(
-            F.col("doc_id").alias("keep_node"), "new_keep"
+    ):
+        # the probing side is the batch — micro-batch-bounded, so every
+        # edge family broadcasts it and the state side never shuffles
+        edges = trimodal_edges_delta(
+            F.broadcast(tb_new), tb_all, F.broadcast(fb_new), fb_all,
+            F.broadcast(vsig_new), vsig_all,
+            F.broadcast(rb_new), rb_all, F.broadcast(trb_new), trb_all,
         ).localCheckpoint(eager=True)
 
-        def _repoint(sub: str, schema: str, keys: list) -> None:
-            full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-            upd = (
-                full.join(F.broadcast(rp), "keep_node")
-                .withColumn("keep_node", F.col("new_keep"))
-                .drop("new_keep")
+        # joint resolution: quality = (modality rank, decoded units)
+        new_q = (
+            t_new.select(
+                (F.col("doc_id") * 3).alias("doc_id"),
+                F.lit(0).alias("mrank"),
+                F.lit(1).cast("long").alias("n_units"),
             )
-            if not upd.isEmpty():
-                merge_state(spark, f"{state_dir}/{sub}", upd, keys)
-
-        # per-modality repoints touch disjoint tables — concurrent
-        run_concurrent(
-            *(
-                lambda s=sub, sc=schema, k=keys: _repoint(s, sc, k)
-                for sub, schema, keys in (
-                    ("cm3_image_index", CM3_IMG_SCHEMA, ["node"]),
-                    (
-                        "cm3_frame_index",
-                        CM3_FRAME_SCHEMA,
-                        ["node", "frame_dhash"],
-                    ),
-                    ("cm3_audio_index", CM3_AUDIO_SCHEMA, ["node"]),
+            .unionByName(
+                n_new.select(
+                    (F.col("doc_id") * 3 + 1).alias("doc_id"),
+                    F.lit(2).alias("mrank"),
+                    F.col("n_frames").alias("n_units"),
+                )
+            )
+            .unionByName(
+                a_new.select(
+                    (F.col("doc_id") * 3 + 2).alias("doc_id"),
+                    F.lit(1).alias("mrank"),
+                    F.col("n_windows").cast("long").alias("n_units"),
                 )
             )
         )
-    mark("repoint")
-
-    # ---- 3) append the batch (kept AND dropped; anti-joined) --------
-    # table-driven so the replay contract (anti-join key + batch tag)
-    # is single-sourced across all seven cm3_* tables (the four band
-    # appends were started right after decode and are joined below)
-    kmap = verdicts.select(
-        F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
-    )
-    node_frames = (
-        (
-            "cm3_image_index", CM3_IMG_SCHEMA,
-            t_new.select(
-                (F.col("doc_id") * 3).alias("node"), "doc_id", "dhash"
-            ),
-            ["node", "doc_id", "dhash", "keep_node"],
-        ),
-        (
-            "cm3_frame_index", CM3_FRAME_SCHEMA,
-            vsig_new.select(
-                (F.col("doc_id") * 3 + 1).alias("node"),
-                "doc_id", "frame_dhash",
-            ).join(n_new.select("doc_id", "n_frames"), "doc_id"),
-            ["node", "doc_id", "frame_dhash", "n_frames", "keep_node"],
-        ),
-        (
-            "cm3_audio_index", CM3_AUDIO_SCHEMA,
-            a_new.select(
-                (F.col("doc_id") * 3 + 2).alias("node"),
-                "doc_id", "sphash", "n_windows",
-            ),
-            ["node", "doc_id", "sphash", "n_windows", "keep_node"],
-        ),
-    )
-    def _append_nodes(sub: str, schema: str, frame: DataFrame, cols) -> None:
-        full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-        (
-            _anti_existing(frame.join(F.broadcast(kmap), "node"), full, "node")
-            .select(*cols, tag)
-            .write.mode("append").parquet(_rsp(f"{state_dir}/{sub}"))
-        )
-
-    # the three node appends run as one concurrent wave; the band
-    # appends (started after decode) and the flags merge (started
-    # after resolve) join here, before maintenance can compact the
-    # tables they write
-    run_concurrent(
-        *(
-            lambda s=sub, sc=schema, f=frame, c=cols: _append_nodes(
-                s, sc, f, c
+        idx_q = (
+            img_idx.select(
+                F.col("node").alias("doc_id"),
+                F.col("keep_node").alias("keep_id"),
+                F.lit(0).alias("mrank"),
+                F.lit(1).cast("long").alias("n_units"),
             )
-            for sub, schema, frame, cols in node_frames
+            .unionByName(
+                # per-frame rows: bounded resolve dedupes per doc after
+                # its endpoint semi-join (r16) — no state-wide shuffle
+                frame_idx.select(
+                    F.col("node").alias("doc_id"),
+                    F.col("keep_node").alias("keep_id"),
+                    F.lit(2).alias("mrank"),
+                    F.col("n_frames").alias("n_units"),
+                )
+            )
+            .unionByName(
+                audio_idx.select(
+                    F.col("node").alias("doc_id"),
+                    F.col("keep_node").alias("keep_id"),
+                    F.lit(1).alias("mrank"),
+                    F.col("n_windows").cast("long").alias("n_units"),
+                )
+            )
         )
-    )
-    join_bands()
-    join_flags()
-    mark("append")
+        verdicts, displaced = resolve_keep_best(
+            new_q, idx_q, edges, ["mrank", "n_units"], bounded_batch=True
+        )
+        verdicts, displaced = run_concurrent(
+            lambda: verdicts.localCheckpoint(eager=True),
+            lambda: displaced.localCheckpoint(eager=True),
+        )
+        flags = _node_flags(verdicts, 3, bid, displaced)
+
+        # ---- 1) land flags (keyed merge), overlapped ----------------
+        # r17: the flags merge touches only cm3_flags — disjoint from
+        # the repoints (node indexes) and every append — so it
+        # overlaps them, joined when this block exits (normally or by
+        # exception)
+        with overlap(
+            lambda: merge_state(
+                spark, f"{state_dir}/cm3_flags", flags,
+                ["doc_id", "modality"],
+            )
+        ):
+            # ---- 2) repoint displaced keepers, per modality ---------
+            # a row's keeper can be any modality, so every node index
+            # is checked against the whole displaced map; the repoint
+            # step rewrites only an index at least one of whose rows
+            # points at a displaced keeper, so a tick that displaces
+            # one audio keeper never read+rewrites the untouched image
+            # and frame tables — tick cost must scale with the delta,
+            # not total state. Disjoint tables — concurrent.
+            if not displaced.isEmpty():
+                run_concurrent(
+                    *(
+                        partial(
+                            repoint_keepers, spark, f"{state_dir}/{sub}",
+                            displaced, "keep_node", keys, schema,
+                        )
+                        for sub, schema, keys in (
+                            ("cm3_image_index", CM3_IMG_SCHEMA, ["node"]),
+                            (
+                                "cm3_frame_index", CM3_FRAME_SCHEMA,
+                                ["node", "frame_dhash"],
+                            ),
+                            ("cm3_audio_index", CM3_AUDIO_SCHEMA, ["node"]),
+                        )
+                    )
+                )
+
+            # ---- 3) append the batch (kept AND dropped; anti-joined)
+            # table-driven, one concurrent wave over the three node
+            # indexes (the four band appends are the outer block's)
+            kmap = F.broadcast(
+                verdicts.select(
+                    F.col("doc_id").alias("node"),
+                    F.col("keep_id").alias("keep_node"),
+                )
+            )
+            node_frames = (
+                (
+                    "cm3_image_index", CM3_IMG_SCHEMA,
+                    t_new.select(
+                        (F.col("doc_id") * 3).alias("node"), "doc_id",
+                        "dhash",
+                    ),
+                ),
+                (
+                    "cm3_frame_index", CM3_FRAME_SCHEMA,
+                    vsig_new.select(
+                        (F.col("doc_id") * 3 + 1).alias("node"),
+                        "doc_id", "frame_dhash",
+                    ).join(n_new.select("doc_id", "n_frames"), "doc_id"),
+                ),
+                (
+                    "cm3_audio_index", CM3_AUDIO_SCHEMA,
+                    a_new.select(
+                        (F.col("doc_id") * 3 + 2).alias("node"),
+                        "doc_id", "sphash", "n_windows",
+                    ),
+                ),
+            )
+            run_concurrent(
+                *(
+                    partial(
+                        append_batch, spark, f"{state_dir}/{sub}",
+                        frame.join(kmap, "node"), "node", bid, schema,
+                    )
+                    for sub, schema, frame in node_frames
+                )
+            )
 
     # ---- in-cadence maintenance (r15, verdict #1): GC retired state
     # snapshots, compact tables past the live-file threshold
@@ -1054,4 +933,3 @@ def trimodal_ingest_tick(
         maintain_state_dir(
             spark, state_dir, file_threshold=maintenance_file_threshold
         )
-        mark("maintenance")
